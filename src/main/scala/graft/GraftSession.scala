@@ -48,9 +48,11 @@ object GraftSession {
       // sibling. Route it through the raw form instead: production
       // checkpoints live on object stores whose integrity is the
       // store's, not a client-side CRC sibling — the raw local form is
-      // the parity configuration, not a shortcut. (FileSystem-API users
-      // — the lakehouse protocol, parquet io — keep their checksums.)
-      // Round 13: both local filesystems additionally skip the
+      // the parity configuration, not a shortcut. The FileSystem-API
+      // face (`fs.file.impl`: the lakehouse protocol, parquet io) drops
+      // its `.crc` siblings too, for the same reason — see
+      // graft.storage.NoChmodLocalFileSystem, which turns checksum
+      // writing and verifying off. Both local filesystems also skip the
       // per-create `chmod` FORK that Hadoop falls back to without its
       // native library — sampled at ~15 % of driver wall on the warm
       // q102 lifecycle (see graft.storage.NoChmodRawLocalFileSystem).

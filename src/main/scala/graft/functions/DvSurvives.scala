@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.types.{BooleanType, DataType}
 
 /** Row-survives-deletion-vector predicate for the DataFrame read path
-  * (`Lakehouse.maskedUnion`): TRUE iff (file, pos) is NOT tombstoned by
+  * (`Lakehouse.scan`): TRUE iff (file, pos) is NOT tombstoned by
   * any applicable DV sidecar.
   *
   * This is the executor-side replacement for the former broadcast
@@ -37,7 +37,7 @@ case class DvSurvives(file: Expression, pos: Expression,
   override def nullable: Boolean = false
 
   @transient private lazy val conf =
-    new org.apache.hadoop.conf.Configuration()
+    graft.storage.HadoopConfs.fresh()
   @transient private lazy val cache =
     scala.collection.mutable.Map.empty[String, DvSidecar.Runs]
 

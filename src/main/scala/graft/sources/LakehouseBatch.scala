@@ -945,9 +945,7 @@ private[sources] class LakehouseVectorReader(
 
   private val fileFields: Set[String] = {
     val conf = graft.storage.HadoopConfs.fresh()
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile
-      .fromPath(new Path(partition.file), conf)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    val r = graft.storage.FooterStats.openReader(new Path(partition.file), conf)
     try {
       import scala.jdk.CollectionConverters._
       r.getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSet
@@ -1831,9 +1829,7 @@ private[graft] object LakehouseBatch {
     else fs.listStatus(d).map(_.getPath)
       .find(_.getName.endsWith(".parquet")).map { f =>
         import scala.jdk.CollectionConverters._
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(f, conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        val r = graft.storage.FooterStats.openReader(f, conf)
         val names =
           try r.getFileMetaData.getSchema.getFields.asScala
             .map(_.getName).toSeq
@@ -2099,8 +2095,7 @@ private[graft] object LakehouseBatch {
   private def footerRowCount(fs: FileSystem, conf: Configuration,
       p: Path): Long = {
     footerOpens.incrementAndGet()
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    val r = graft.storage.FooterStats.openReader(p, conf)
     try r.getRecordCount finally r.close()
   }
 

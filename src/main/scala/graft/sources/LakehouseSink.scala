@@ -159,7 +159,7 @@ private[sources] case class LakehouseStreamingWriterFactory(
       override def abort(): Unit = {
         writer.close()
         val p = new Path(file)
-        p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+        p.getFileSystem(graft.storage.HadoopConfs.fresh())
           .delete(p, false)
       }
 
@@ -267,7 +267,7 @@ private[sources] case class LakehouseStagedWriter(file: String,
   override def abort(): Unit = {
     writer.close()
     val p = new Path(file)
-    p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    p.getFileSystem(graft.storage.HadoopConfs.fresh())
       .delete(p, false)
   }
 

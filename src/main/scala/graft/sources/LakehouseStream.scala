@@ -364,9 +364,7 @@ private[sources] class LakehouseGroupReader(
   // than null-fill.
   private val conf = graft.storage.HadoopConfs.fresh()
   private val fileSchema: org.apache.parquet.schema.MessageType = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile
-      .fromPath(new Path(partition.file), conf)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    val r = graft.storage.FooterStats.openReader(new Path(partition.file), conf)
     try r.getFileMetaData.getSchema finally r.close()
   }
   private val reader = {
@@ -947,9 +945,7 @@ private[graft] object LakehouseStream {
       dir: Path): Long =
     fs.listStatus(dir).filter(_.getPath.getName.endsWith(".parquet"))
       .map { st =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(st.getPath, conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        val r = graft.storage.FooterStats.openReader(st.getPath, conf)
         try r.getRecordCount finally r.close()
       }.sum
 }

@@ -28,6 +28,15 @@ import org.apache.spark.sql.types._
   */
 object FooterStats {
 
+  /** Open a parquet footer reader with the CALLER's conf as its options.
+    * `ParquetFileReader.open(InputFile)` alone builds a fresh
+    * `HadoopParquetConfiguration` — a `new Configuration()` that
+    * re-parses the Hadoop default resources — on every open.
+    */
+  def openReader(f: Path, conf: Configuration): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromPath(f, conf),
+      org.apache.parquet.HadoopReadOptions.builder(conf).build())
+
   /** Per-file decoded stats (file NAME → column → (min, max, nullCount))
     * plus each column's Spark type, derived from the parquet logical
     * types so the manifest carries the same types the scan-based
@@ -42,7 +51,7 @@ object FooterStats {
     // latency-of-one, not latency-times-files, on the driver
     val opened = DriverIo.parMap(files) { f =>
       try {
-        val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+        val r = openReader(f, conf)
         try Some(r.getFooter) finally r.close()
       } catch { case _: Exception => None }
     }
@@ -95,7 +104,7 @@ object FooterStats {
     if (files.isEmpty) return None
     val opened = DriverIo.parMap(files) { f =>
       try {
-        val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+        val r = openReader(f, conf)
         try Some(f.getName -> r.getRecordCount) finally r.close()
       } catch { case _: Exception => None }
     }
@@ -119,7 +128,7 @@ object FooterStats {
     // pages), same bounded pool as the stats decode
     def bloomsOf(f: Path): Option[(String, Map[String, Array[Byte]])] =
       try {
-        val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+        val r = openReader(f, conf)
         try {
           val footer = r.getFooter
           val blocks = footer.getBlocks
@@ -179,8 +188,7 @@ object FooterStats {
     import PrimitiveType.PrimitiveTypeName._
     if (parts.isEmpty) return None
     val schemas = parts.map { p =>
-      val r = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new Path(p), conf))
+      val r = openReader(new Path(p), conf)
       try r.getFileMetaData.getSchema finally r.close()
     }
     val msg = schemas.head

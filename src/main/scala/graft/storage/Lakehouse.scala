@@ -4,6 +4,7 @@ import graft.model.Schemas
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.types.StructType
 
 /** Thin parquet table layer (no Delta/Iceberg jars in this env —
@@ -207,9 +208,10 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     * `date_trunc('DAY', max(tsCol))`. Returns None — callers fall back
     * to the scan — whenever that equivalence is not provable from the
     * layout: a flat (unpartitioned) root, a row-level mask sidecar
-    * (`_dv`/`_eqdel` could have emptied the newest day), or no
-    * partition dirs at all. At 100 TB this replaces a full-history
-    * max() scan per mart build with O(#roots) LIST calls.
+    * (`_dv`/`_eqdel` could have emptied the newest day), a NULL-day or
+    * non-date partition dir, or no partition dirs at all. At 100 TB
+    * this replaces a full-history max() scan per mart build with
+    * O(#roots) LIST calls.
     */
   def maxPartitionDay(name: String): Option[java.sql.Timestamp] = {
     if (!exists(name)) return None
@@ -225,6 +227,9 @@ final class Lakehouse(val spark: SparkSession, val root: String,
           return None // masks could hide the newest day's rows
         if (st.isDirectory && n.startsWith("trans_dt_day=")) {
           val v = n.substring("trans_dt_day=".length)
+          // a NULL-day dir (`__HIVE_DEFAULT_PARTITION__`) or any value
+          // that is not a plain date: the max is not provable here
+          if (!v.matches("\\d{4}-\\d{2}-\\d{2}")) return None
           if (maxDay == null || v > maxDay) maxDay = v
         }
       }
@@ -380,7 +385,9 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     // equality-delete masking applies WITHIN the selected chain: a
     // tombstone committed at v ≤ maxVersion masks earlier rows, one
     // committed after the as-of point doesn't exist yet
-    maskedUnion(roots, readSchema(name, schema))
+    val basis = Lakehouse.ReadBasis(committed.map(_._1).max,
+      committed.map(_._1).toSet)
+    scan(ctxOver(roots, basis), schema)
       .select(schema.fieldNames.map(col).toIndexedSeq: _*)
   }
 
@@ -456,11 +463,8 @@ final class Lakehouse(val spark: SparkSession, val root: String,
       }
     if (range.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    else range.map { case (_, p, _, _) =>
-      spark.read.schema(readSchema(name, schema))
-        .option("basePath", p.toString).parquet(p.toString)
-    }.reduce(_ unionByName _)
-      .select(schema.fieldNames.map(col).toIndexedSeq: _*)
+    else scan(ctxOver(range.map(_._2.toString), Lakehouse.ReadBasis(
+      toVersion, range.map(_._1).toSet)), schema)
   }
 
   /** Read a table; absent or empty tables yield an empty DataFrame with the
@@ -472,7 +476,7 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     if (exists(name))
       // explicit schema: an empty parquet dir or partition-discovery columns
       // must not change the contract
-      readRoots(name, readSchema(name, schema))
+      readRootsWithBasis(name, schema)._1
         .select(schema.fieldNames.map(col).toIndexedSeq: _*)
     else
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
@@ -502,20 +506,13 @@ final class Lakehouse(val spark: SparkSession, val root: String,
       (spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema),
         Lakehouse.ReadBasis(0L, Set.empty))
 
-  /** One scan per live root, each its own partition-discovery base (a
-    * multi-path read would try to find one common base and trip over the
-    * version dirs), unioned. Filters and pruning push into every branch.
-    */
-  private def readRoots(name: String, schema: StructType): DataFrame =
-    readRootsWithBasis(name, schema)._1
-
-  /** [[readRoots]] plus the read basis from the SAME listing — the
-    * maintenance-op entry point (see [[liveRootsAndBasis]]).
+  /** The live chain through [[scan]], plus the read basis from the SAME
+    * listing — the maintenance-op entry point (see [[liveRootsAndBasis]]).
     */
   private def readRootsWithBasis(name: String,
       schema: StructType): (DataFrame, Lakehouse.ReadBasis) = {
-    val (roots, basis) = liveRootsAndBasis(name)
-    (maskedUnion(roots, schema), basis)
+    val ctx = maskedCtx(name)
+    (scan(ctx, schema), ctx.basis)
   }
 
   /** Version number a live root's tombstones/sequencing key on (the
@@ -527,103 +524,146 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     else 0L
   }
 
-  /** Equality-delete key set recorded in a root, if any. */
-  private def eqDelKeys(root: String): Option[DataFrame] = {
-    val p = new Path(root, EqDelDir)
-    if (fs.exists(p)) Some(spark.read.parquet(p.toString)) else None
-  }
-
-  /** Equality-delete tombstone descriptors across roots: (version, dir,
-    * key column names). Driver cost is one schema-infer footer read per
-    * tombstone commit — never the keys themselves.
-    */
-  private def eqDelRefs(roots: Seq[String]): Seq[(Long, String, Seq[String])] =
-    roots.flatMap { r =>
-      val p = new Path(r, EqDelDir)
-      if (!fs.exists(p)) None
-      else Some((rootVersion(r), p.toString,
-        spark.read.parquet(p.toString).columns.toSeq))
-    }
-
-  /** Mask `df` by the applicable equality-delete tombstone sets with
-    * the executor-side [[graft.functions.EqDelSurvives]] filter — the
-    * SAME probe (and JVM-wide key-set cache) the V2 scan's partition
-    * readers use, unifying the two read paths' masking. The former
-    * broadcast anti-join per tombstone put O(#keys) in driver/broadcast
-    * memory and a join stage in every branch; the filter rides the scan
-    * with no join, no shuffle, no broadcast.
-    */
-  private def eqDelMask(df: DataFrame, schema: StructType,
-      applicable: Seq[(Long, String, Seq[String])]): DataFrame =
-    if (applicable.isEmpty) df
-    else {
-      val allCols = applicable.flatMap(_._3).distinct
-      val refs = applicable.map { case (_, dir, ks) =>
-        graft.functions.EqDelSurvives.Ref(dir,
-          StructType(ks.map { k =>
-            require(schema.fieldNames.contains(k),
-              s"eq-del key $k not in table schema")
-            schema(k)
-          }), ks.map(allCols.indexOf))
-      }
-      df.filter(graft.functions.EqDelSurvives(allCols.map(col), refs))
-    }
-
-  /** Deletion vector recorded in a root, if any: (file STRING — the
-    * data file's NAME, pos BIGINT — its 0-based row index). The parquet
-    * is the audit/change-feed record; READERS use the per-file binary
-    * sidecars next to it ([[DvSidecar]]) so positions never transit the
-    * driver.
-    */
-  private def dvKeys(root: String): Option[DataFrame] = {
-    val p = new Path(root, Lakehouse.Protocol.DvDir)
-    if (fs.exists(p)) Some(spark.read.parquet(p.toString)) else None
-  }
-
   /** Sidecar index of a root's DV commit: data-file name → sidecar
     * path. One names-only listing; empty when the root has no DVs.
+    * (The DV parquet next to the sidecars — (file, pos) rows — is the
+    * audit/change-feed record; readers use only the sidecars.)
     */
   private def dvIndex(root: String): Map[String, String] =
     DvSidecar.index(fs, new Path(root, Lakehouse.Protocol.DvDir))
 
-  /** Union the live roots with merge-on-read equality-delete semantics:
-    * a tombstone key set committed at version v masks matching rows of
-    * every root with a LOWER version (Iceberg's sequence-number rule), so
-    * a key re-inserted AFTER its delete survives. Each mask is a
-    * broadcast anti-join (tombstones are point-delete-sized by contract);
-    * scans stay partition-parallel, nothing shuffles the data side.
-    * Tables with no tombstones take the plain union — zero plan overhead.
+  /** A read context over explicit roots. Each root is walked ONCE
+    * (Spark's hidden-name rule, recursive, keeping the dir names
+    * between root and file — the `k=v` partition segments); that walk
+    * is the only listing a read pays, and it flags the roots whose
+    * tombstone refs (one footer schema read each, never the keys) and
+    * DV indexes are then loaded.
     */
-  private def maskedUnion(roots: Seq[String],
-      schema: StructType): DataFrame = {
-    val tombs: Seq[(Long, String, Seq[String])] = eqDelRefs(roots)
-    // deletion vectors ([[deleteRowsMoR]]): positional tombstones follow
-    // the SAME sequence rule — a DV committed at version v masks its
-    // (file, pos) rows in every root with a LOWER version; data written
-    // after the DV can never be masked by it. The driver carries only
-    // each DV commit's sidecar INDEX (file name → sidecar path, one
-    // names-only listing per DV root); the positions themselves are
-    // opened executor-side by the DvSurvives filter — never collected,
-    // never broadcast, no O(#deleted rows) term anywhere on the driver.
-    val dvs: Seq[(Long, Map[String, String])] =
-      roots.map(r => (rootVersion(r), dvIndex(r))).filter(_._2.nonEmpty)
-    roots.map { r =>
-      val base = spark.read.schema(schema).option("basePath", r).parquet(r)
-      val rv = rootVersion(r)
-      val eqMasked = eqDelMask(base, schema, tombs.filter(_._1 > rv))
-      val applicable = dvs.filter(_._1 > rv).map(_._2)
-      if (applicable.isEmpty) eqMasked
-      else {
-        // rows identify as (file name, row index) via the parquet
-        // metadata columns; the filter rides each scan branch — no
-        // join, no shuffle, no broadcast
-        val idx: Map[String, Seq[String]] = applicable
-          .flatMap(_.toSeq).groupMap(_._1)(_._2)
-        eqMasked.filter(graft.functions.DvSurvives(
-          substring_index(col("_metadata.file_path"), "/", -1),
-          col("_metadata.row_index"), idx))
+  private def ctxOver(roots: Seq[String],
+      basis: Lakehouse.ReadBasis): Lakehouse.MaskedCtx = {
+    val live = roots.map { r =>
+      val files =
+        Seq.newBuilder[(org.apache.hadoop.fs.FileStatus, Seq[String])]
+      var dv, eqDel = false
+      def walk(dir: Path, segs: Seq[String]): Unit =
+        fs.listStatus(dir).foreach { st =>
+          val n = st.getPath.getName
+          if (segs.isEmpty && n == Lakehouse.Protocol.DvDir) dv = true
+          else if (segs.isEmpty && n == EqDelDir) eqDel = true
+          else if (!Lakehouse.hiddenName(n)) {
+            if (st.isDirectory) walk(st.getPath, segs :+ n)
+            else files += st -> segs
+          }
+        }
+      walk(new Path(r), Nil)
+      Lakehouse.LiveRoot(r, rootVersion(r), files.result(), dv, eqDel)
+    }
+    Lakehouse.MaskedCtx(live, basis,
+      live.filter(_.eqDel).map { l =>
+        val p = new Path(l.root, EqDelDir).toString
+        (l.v, p, spark.read.parquet(p).columns.toSeq)
+      },
+      live.filter(_.dv).map(l => (l.v, dvIndex(l.root)))
+        .filter(_._2.nonEmpty))
+  }
+
+  /** THE live-chain read planner (read, readWithPartitionColumns,
+    * readAt, readBranch, the feeds, readBetween, rewriteDeletes and the
+    * merge-on-read DML's masked read): ONE parquet relation over the
+    * files `ctx` listed — no per-root DataSource resolution (glob,
+    * existence probe, JobConf, InMemoryFileIndex listing). Partition
+    * columns are the `k=v` dir keys the schema names; their values come
+    * from an explicit spec built from the listed dirs, NULL for a file
+    * without that dir (a flat root) or under `__HIVE_DEFAULT_PARTITION__`.
+    *
+    * Masks apply per FILE by the sequence rule: a tombstone key set or
+    * a deletion vector committed at version v masks only files of roots
+    * BELOW v, so rows re-inserted or updated after a delete survive.
+    * [[graft.functions.EqDelSurvives]] and [[graft.functions.DvSurvives]]
+    * key on the row's file PATH and open their sets executor-side — no
+    * join, no shuffle, no broadcast.
+    *
+    * A deletion vector names a data file by its bare name, so a read
+    * fails, instead of masking the wrong rows, where a name repeats
+    * among the files an outstanding vector could mask — or, for a
+    * `withPos` read (whose names a new vector carries), anywhere.
+    *
+    * `withPos` adds the rows' physical identity ([[Lakehouse.FileCol]],
+    * [[Lakehouse.PosCol]]) and nothing else; `keep` restricts the scan
+    * to the data files it accepts.
+    */
+  private def scan(ctx: Lakehouse.MaskedCtx, schema: StructType,
+      withPos: Boolean = false,
+      keep: Path => Boolean = _ => true): DataFrame = {
+    val all = for {
+      l <- ctx.live
+      (st, segs) <- l.files
+    } yield (l.v, st, segs)
+    all.filter(f => withPos || ctx.dvs.exists(d =>
+      d._1 > f._1 && d._2.contains(f._2.getPath.getName)))
+      .groupBy(_._2.getPath.getName).find(_._2.size > 1).foreach {
+        case (n, dup) => throw new IllegalStateException(
+          s"data file name $n repeats in ${dup.map(_._2.getPath.getParent)
+            .mkString(", ")}: a deletion vector naming it is ambiguous")
       }
-    }.reduce(_ unionByName _)
+    val files = all.filter(f => keep(f._2.getPath))
+    val kv = (seg: String) => {
+      val i = seg.indexOf('=')
+      if (i <= 0) None
+      else Some(ExternalCatalogUtils.unescapePathName(seg.take(i)) ->
+        seg.drop(i + 1))
+    }
+    val partCols = files.flatMap(_._3.flatMap(kv(_).map(_._1))).distinct
+      .filter(schema.fieldNames.contains)
+    val tz = spark.conf.get("spark.sql.session.timeZone")
+    val parts = if (partCols.isEmpty) Nil else files
+      .map(f => f._2.getPath.getParent -> f._3).distinctBy(_._1)
+      .map { case (dir, segs) =>
+        val vals = segs.flatMap(kv(_)).toMap
+        (org.apache.spark.sql.catalyst.InternalRow.fromSeq(partCols.map(c =>
+          vals.get(c).map(Lakehouse.partitionValue(_, schema(c).dataType,
+            tz)).orNull)), dir)
+      }
+    val base = org.apache.spark.sql.GraftColumnBridge.listedParquet(spark,
+      ctx.live.map(l => new Path(l.root)), files.map(_._2),
+      StructType(schema.filterNot(f => partCols.contains(f.name))),
+      StructType(partCols.map(schema(_))), parts)
+    // keys as `_metadata.file_path` renders a path: its URI rebuilt from
+    // the parts (URL-encoded; `file:/…`, where the listing has `file:///…`)
+    val path = (st: org.apache.hadoop.fs.FileStatus) => {
+      val u = st.getPath.toUri
+      new java.net.URI(u.getScheme, u.getAuthority, u.getPath, null, null)
+        .toString
+    }
+    val filePath = col("_metadata.file_path")
+    val fileName = substring_index(filePath, "/", -1)
+    val rowIndex = col("_metadata.row_index")
+    val tombs = ctx.tombs.filter(t => files.exists(_._1 < t._1))
+    val eqMasked = if (tombs.isEmpty) base else {
+      val keys = tombs.flatMap(_._3).distinct
+      val refs = tombs.map { case (v, dir, ks) =>
+        graft.functions.EqDelSurvives.Ref(dir, StructType(ks.map { k =>
+          require(schema.fieldNames.contains(k),
+            s"eq-del key $k not in table schema")
+          schema(k)
+        }), ks.map(keys.indexOf), v)
+      }
+      base.filter(graft.functions.EqDelSurvives(keys.map(col), refs,
+        filePath, files.map(f => path(f._2) -> f._1).toMap))
+    }
+    val dvIdx = files.flatMap { f =>
+      val n = f._2.getPath.getName
+      val sidecars = ctx.dvs.filter(_._1 > f._1).flatMap(_._2.get(n))
+      if (sidecars.isEmpty) None else Some(path(f._2) -> sidecars)
+    }.toMap
+    val masked =
+      if (dvIdx.isEmpty) eqMasked
+      else eqMasked.filter(
+        graft.functions.DvSurvives(filePath, rowIndex, dvIdx))
+    masked.select(schema.fieldNames.map(col).toIndexedSeq ++ (
+      if (!withPos) Nil
+      else Seq(fileName.as(Lakehouse.FileCol),
+        rowIndex.as(Lakehouse.PosCol))): _*)
   }
 
   /** Fact written via [[appendPartitionedByDay]] carries an extra
@@ -657,7 +697,7 @@ final class Lakehouse(val spark: SparkSession, val root: String,
       throw new IllegalArgumentException(s"unknown table: $name"))
     val full = readSchema(name, schema)
     if (exists(name))
-      readRoots(name, full)
+      scan(maskedCtx(name), full)
     else
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], full)
   }
@@ -1295,11 +1335,26 @@ final class Lakehouse(val spark: SparkSession, val root: String,
 
   /** Crash-safe append with day partitioning (fact table). */
   def appendPartitionedByDay(name: String, df: DataFrame, tsCol: String): Unit = {
-    val vdir = writeVersion(name, MarkerDelta, () => ())(p =>
+    val vdir = writeVersion(name, MarkerDelta, () => ()) { p =>
       df.withColumn("trans_dt_day", to_date(col(tsCol)))
-        .write.mode("overwrite").partitionBy("trans_dt_day").parquet(p))
+        .write.mode("overwrite").partitionBy("trans_dt_day").parquet(p)
+      distinctFileNames(p)
+    }
     ensureAboveFulls(new Path(tablePath(name)), vdir)
   }
+
+  /** Spark's partitioned writer restarts its file counter in each
+    * partition dir, so one task writing several days leaves the SAME
+    * file name in each of them. A deletion vector names its data file
+    * by that bare name: renames every repeat (`<n>-<name>`), so each
+    * name in the uncommitted root `p` is unique.
+    */
+  private def distinctFileNames(p: String): Unit =
+    listDataFilesIn(new Path(p)).map(_.getPath).groupBy(_.getName).values
+      .foreach(_.zipWithIndex.tail.foreach { case (f, i) =>
+        require(fs.rename(f, new Path(f.getParent, s"$i-${f.getName}")),
+          s"data-file rename failed: $f")
+      })
 
   /** Crash-safe snapshot replace: a committed FULL version shadows every
     * older version and any pre-versioning top-level files, which are then
@@ -1391,6 +1446,7 @@ final class Lakehouse(val spark: SparkSession, val root: String,
         bloomCols)
       (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
         .parquet(p)
+      if (partitionCols.nonEmpty) distinctFileNames(p)
       writeStats(p, statsCols, bloomCols)
       // the COMMITTED full records its basis too: a racing delta whose
       // post-check finds this full already committed (marker landed,
@@ -1749,9 +1805,8 @@ final class Lakehouse(val spark: SparkSession, val root: String,
           .join(conformed, keyCols, "left_semi")
           .groupBy(col(Lakehouse.FileCol)).count()
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        val allLive = ctx.roots
-          .flatMap(r => listDataFilesIn(new Path(r)))
-          .map(_.getPath.getName)
+        val allLive = ctx.live.flatMap(_.files)
+          .map(_._1.getPath.getName)
         Some((allLive.map(n => n -> matched.getOrElse(n, 0L)), ctx.basis))
       }
     val vdir = writeVersion(name, MarkerDelta, beforeCommit) { p =>
@@ -1800,7 +1855,7 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     * Delta/Iceberg-v3 positional-tombstone shape: instead of rewriting
     * surviving rows ([[delete]]'s copy-on-write), the matching rows'
     * (file, row-index) identities land as a data-less DELTA commit
-    * (`_GRAFT_DV`), masked out by every reader ([[maskedUnion]] for
+    * (`_GRAFT_DV`), masked out by every reader ([[scan]] for
     * this class's scans and compaction, the V2 batch scan natively).
     * At 100 TB this turns a predicate delete from a table rewrite into
     * a metadata-sized commit; the next compaction MATERIALIZES the
@@ -1844,7 +1899,7 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     * readers never see the delete without the insert or vice versa.
     *
     * Matched rows are read through the EXISTING masks (eq-del +
-    * DV-survives, the same per-root filters maskedUnion applies):
+    * DV-survives, the same per-file filters [[scan]] applies):
     * updating an already-deleted row must not resurrect it as a
     * post-image. Rows with a NULL predicate are not matched (the SQL
     * UPDATE contract). Cost is a masked scan plus writes sized by the
@@ -1888,7 +1943,7 @@ final class Lakehouse(val spark: SparkSession, val root: String,
   }
 
   /** The LIVE rows of a table (every mask applied — eq-del tombstones
-    * and DV survivorship, the same per-root filters maskedUnion uses)
+    * and DV survivorship, the same per-file filters [[scan]] uses)
     * with each row's PHYSICAL identity as extra columns
     * ([[Lakehouse.FileCol]], [[Lakehouse.PosCol]]) — what a
     * merge-on-read mutation needs to name its pre-images positionally.
@@ -1910,23 +1965,22 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     (readMaskedWithPosOn(ctx, schema, onlyFiles), ctx.basis)
   }
 
-  /** Resolve ONE masked-read context (live roots + basis + tombstone and
-    * DV indexes) for a merge-on-read mutation to share across its passes
-    * — the matched scan AND the post-mask extremes scan read the same
-    * snapshot without paying the listing walk twice (the r9 driver bench
-    * showed the duplicated resolve as a 1.4-2× regression across the MoR
-    * DML pack).
+  /** Resolve ONE masked-read context (live roots + their listing +
+    * basis + tombstone and DV indexes) for a merge-on-read mutation to
+    * share across its passes — the matched scan AND the post-mask
+    * extremes scan read the same snapshot without paying the listing
+    * walk twice (a duplicated resolve measured as a 1.4-2× regression
+    * across the MoR DML pack).
     */
   private[graft] def maskedCtx(name: String): Lakehouse.MaskedCtx = {
     val (roots, basis) = liveRootsAndBasis(name)
-    val tombs = eqDelRefs(roots)
-    val dvs: Seq[(Long, Map[String, String])] =
-      roots.map(r => (rootVersion(r), dvIndex(r))).filter(_._2.nonEmpty)
-    Lakehouse.MaskedCtx(roots, basis, tombs, dvs)
+    ctxOver(roots, basis)
   }
 
-  /** [[readMaskedWithPosBasis]] over an already-resolved context —
-    * zero listings beyond the optional `onlyFiles` explicit-path walk.
+  /** [[readMaskedWithPosBasis]] over an already-resolved context — the
+    * one-relation [[scan]] plus the two identity columns, zero listings.
+    * `onlyFiles` (the DV-extremes pass) narrows the scan to the named
+    * files.
     */
   private[graft] def readMaskedWithPosOn(ctx: Lakehouse.MaskedCtx,
       schema: StructType,
@@ -1935,68 +1989,8 @@ final class Lakehouse(val spark: SparkSession, val root: String,
       !schema.fieldNames.contains(Lakehouse.PosCol),
       s"reserved column name collision: ${Lakehouse.FileCol}/" +
         s"${Lakehouse.PosCol}")
-    val roots = ctx.roots
-    val tombs = ctx.tombs
-    val dvs = ctx.dvs
-    // ONE relation per GROUP of roots sharing the same applicable-mask
-    // set: a mask at version v applies only to roots BELOW v, so roots
-    // between two mask versions see identical masks and can scan as a
-    // single relation (mask filters are keyed by file NAME, never by
-    // root). With no masks at all — the common case — the whole table
-    // is ONE scan node. Before this the matched scan planned O(#roots)
-    // one-file relations: 103 scan nodes at a 100-commit chain, ~5x
-    // the wall clock of the same bytes through one node (StressCommit
-    // cost, scan-shape diagnostics). Partition columns still infer
-    // per input DIRECTORY, so day-partitioned roots group safely.
-    //
-    // `onlyFiles` (the DV-extremes pass) keeps one group per root:
-    // explicit FILE paths need the root as basePath for partition
-    // inference, and the pass is already bounded by the delete.
-    final case class MaskGroup(tombVs: Seq[Long], dvVs: Seq[Long],
-        srcs: Seq[String], basePath: Option[String])
-    val groups: Seq[MaskGroup] = onlyFiles match {
-      case Some(names) =>
-        roots.flatMap { r =>
-          val rv = rootVersion(r)
-          val srcs = listDataFilesIn(new Path(r))
-            .map(_.getPath).filter(p => names(p.getName)).map(_.toString)
-          if (srcs.isEmpty) None
-          else Some(MaskGroup(tombs.filter(_._1 > rv).map(_._1),
-            dvs.filter(_._1 > rv).map(_._1), srcs, Some(r)))
-        }
-      case None =>
-        roots.groupBy { r =>
-          val rv = rootVersion(r)
-          (tombs.filter(_._1 > rv).map(_._1),
-            dvs.filter(_._1 > rv).map(_._1))
-        }.toSeq.map { case ((tv, dvv), rs) => MaskGroup(tv, dvv, rs, None) }
-          .sortBy(_.srcs.headOption.getOrElse(""))
-    }
-    val tombByV = tombs.map(t => t._1 -> t).toMap
-    val dvByV = dvs.toMap
-    val frames = groups.map { g =>
-      val rd = spark.read.schema(schema)
-      val base = g.basePath.fold(rd)(b => rd.option("basePath", b))
-        .parquet(g.srcs: _*)
-        .select(col("*"),
-          substring_index(col("_metadata.file_path"), "/", -1)
-            .as(Lakehouse.FileCol),
-          col("_metadata.row_index").as(Lakehouse.PosCol))
-      val eqMasked = eqDelMask(base, schema, g.tombVs.map(tombByV))
-      val applicable = g.dvVs.map(dvByV)
-      if (applicable.isEmpty) eqMasked
-      else eqMasked.filter(graft.functions.DvSurvives(
-        col(Lakehouse.FileCol), col(Lakehouse.PosCol),
-        applicable.flatMap(_.toSeq).groupMap(_._1)(_._2)))
-    }
-    val frame = frames.reduceOption(_ unionByName _).getOrElse {
-      val full = schema
-        .add(Lakehouse.FileCol, org.apache.spark.sql.types.StringType)
-        .add(Lakehouse.PosCol, org.apache.spark.sql.types.LongType)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], full)
-    }
-    frame
+    scan(ctx, schema, withPos = true,
+      onlyFiles.fold((_: Path) => true)(names => p => names(p.getName)))
   }
 
   /** ONE atomic merge-on-read delta: `masks` (file STRING, pos BIGINT —
@@ -2211,9 +2205,8 @@ final class Lakehouse(val spark: SparkSession, val root: String,
         fs.exists(sp) && fs.listStatus(sp).toSeq.map(_.getPath)
           .find(_.getName.endsWith(".parquet")).exists { f =>
             import scala.jdk.CollectionConverters._
-            val in = org.apache.parquet.hadoop.util.HadoopInputFile
-              .fromPath(f, spark.sparkContext.hadoopConfiguration)
-            val pr = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+            val pr = FooterStats.openReader(f,
+              spark.sparkContext.hadoopConfiguration)
             try pr.getFileMetaData.getSchema.getFields.asScala
               .exists(_.getName.startsWith("min_"))
             finally pr.close()
@@ -2370,20 +2363,18 @@ final class Lakehouse(val spark: SparkSession, val root: String,
       beforeCommit: () => Unit): Seq[String] = {
     require(exists(name), s"no such table: $name")
     val dest = new Path(tablePath(name))
-    val (roots, rwBasis) = liveRootsAndBasis(name)
-    val dvs: Seq[(Long, Map[String, String])] =
-      roots.map(r => (rootVersion(r), dvIndex(r))).filter(_._2.nonEmpty)
+    val ctx = maskedCtx(name)
+    val (roots, rwBasis, dvs) = (ctx.roots, ctx.basis, ctx.dvs)
     if (dvs.isEmpty && packing.isEmpty) return Nil
     // per-DV-commit deleted counts from the `_dv_counts` index (header
     // reads only for legacy commits) — the selection loop below must
     // not pay a per-sidecar RPC per candidate file
-    val dvCounts: Map[Long, Map[String, Long]] = roots.flatMap { r =>
-      val idx = dvIndex(r)
-      if (idx.isEmpty) None
-      else Some(rootVersion(r) -> DvSidecar.deletedCounts(fs,
-        new Path(r, Lakehouse.Protocol.DvDir), idx))
+    val dvCounts: Map[Long, Map[String, Long]] = ctx.live.flatMap { l =>
+      dvs.find(_._1 == l.v).map { case (v, idx) => v ->
+        DvSidecar.deletedCounts(fs,
+          new Path(l.root, Lakehouse.Protocol.DvDir), idx)
+      }
     }.toMap
-    val tombs: Seq[(Long, String, Seq[String])] = eqDelRefs(roots)
     val conf = spark.sparkContext.hadoopConfiguration
     // files an EARLIER rewrite already replaced never qualify again —
     // their whole-file masks would select them every run and produce
@@ -2472,9 +2463,9 @@ final class Lakehouse(val spark: SparkSession, val root: String,
       manByRoot.view.mapValues(_._1).toMap
     // (root, rootVersion, path, rows, bytes, foldsMasks) per candidate
     val candidates: Seq[(String, Long, Path, Long, Long, Boolean)] = for {
-      r <- roots
-      rv = rootVersion(r)
-      st <- listDataFilesIn(new Path(r))
+      l <- ctx.live
+      (r, rv) = (l.root, l.v)
+      (st, _) <- l.files
       if !alreadyRewritten.exists { case (w, names) =>
         w > rv && names(st.getPath.getName) }
       applicable = dvs.filter(_._1 > rv)
@@ -2482,9 +2473,7 @@ final class Lakehouse(val spark: SparkSession, val root: String,
       small = packing.exists(st.getLen < _._1)
       if applicable.nonEmpty || small
       rows = rowsByRoot(r).getOrElse(st.getPath.getName, {
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(st.getPath, conf)
-        val pr = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        val pr = FooterStats.openReader(st.getPath, conf)
         try pr.getRecordCount finally pr.close()
       })
       if rows > 0
@@ -2526,21 +2515,7 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     if (packing.isDefined && selected.size < 2 &&
       !candidates.exists(t => t._6 && selected.exists(_._3 == t._3)))
       return Nil
-    val survivors = selected.groupBy(_._1).toSeq.sortBy(_._1).map {
-      case (root, files) =>
-        val rv = files.head._2
-        val names = files.map(_._3.getName).toSet
-        val base = spark.read.schema(schema).option("basePath", root)
-          .parquet(files.map(_._3.toString): _*)
-        val eqMasked = eqDelMask(base, schema, tombs.filter(_._1 > rv))
-        val idx: Map[String, Seq[String]] = dvs.filter(_._1 > rv)
-          .flatMap(_._2.toSeq).filter(t => names(t._1))
-          .groupMap(_._1)(_._2)
-        eqMasked.filter(graft.functions.DvSurvives(
-          substring_index(col("_metadata.file_path"), "/", -1),
-          col("_metadata.row_index"), idx))
-          .select(schema.fieldNames.map(col).toIndexedSeq: _*)
-    }.reduce(_ unionByName _)
+    val survivors = scan(ctx, schema, keep = selected.map(_._3).toSet)
     val replaced = selected.map(_._3.getName)
     val outFiles = packing match {
       case Some((_, target)) =>
@@ -2836,22 +2811,10 @@ final class Lakehouse(val spark: SparkSession, val root: String,
         // what signed-aggregate MV folds need.
         val dvDir = new Path(p, Lakehouse.Protocol.DvDir)
         val affected = DvSidecar.index(fs, dvDir).keySet
-        val lowerDirs = all.filter(_.v < v).map(_.path) :+
-          new Path(tablePath(name))
-        val paths = lowerDirs.flatMap { d =>
-          val out = Seq.newBuilder[String]
-          def walk(dir: Path): Unit =
-            fs.listStatus(dir).foreach { st =>
-              val n = st.getPath.getName
-              if (!n.startsWith("_") && !n.startsWith(".")) {
-                if (st.isDirectory) walk(st.getPath)
-                else if (n.endsWith(".parquet") && affected(n))
-                  out += st.getPath.toString
-              }
-            }
-          if (fs.exists(d)) walk(d)
-          out.result()
-        }.distinct
+        val paths = (all.filter(_.v < v).map(_.path) :+
+          new Path(tablePath(name))).flatMap(listDataFilesIn)
+          .map(_.getPath).filter(f => affected(f.getName))
+          .map(_.toString).distinct
         val deletes =
           if (paths.isEmpty) // empty delete: no affected files, no rows
             spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
@@ -3247,8 +3210,8 @@ final class Lakehouse(val spark: SparkSession, val root: String,
         case (_, p) if fs.exists(new Path(p, m)) && commitKind(p).isEmpty =>
           p.toString
       }
-    val (live, _) = liveRootsAndBasis(name)
-    maskedUnion(live ++ staged, schema)
+    val (live, basis) = liveRootsAndBasis(name)
+    scan(ctxOver(live ++ staged, basis), schema)
       .select(schema.fieldNames.map(col).toIndexedSeq: _*)
   }
 
@@ -3453,13 +3416,11 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     if (!exists(name))
       return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
         .filter(pred)
-    val roots = dataPaths(name)
-    // equality-delete masks compose with file pruning: the filter
-    // applies AFTER the manifest cut (a masked row inside a surviving
-    // file must still not serve)
-    val tombs = eqDelRefs(roots)
-    val parts = roots.map { root =>
-      val rootDf: DataFrame = {
+    // row masks compose with file pruning: the planner applies them
+    // AFTER the manifest cut (a masked row inside a surviving file must
+    // still not serve); a root's None keeps all its files
+    val ctx = maskedCtx(name)
+    val kept: Seq[Option[Seq[String]]] = ctx.roots.map { root =>
       val statsPath = new Path(root, StatsDir)
       // the manifest dir itself is underscore-hidden, so it must be read
       // by its explicit part files (Spark's hidden-path filter only
@@ -3510,19 +3471,13 @@ final class Lakehouse(val spark: SparkSession, val root: String,
           case Some(_) => None // manifest without this column's zone map
           case None => sparkPrune()
         }
-      pruned match {
-        case Some(Nil) =>
-          spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-        case Some(files) =>
-          spark.read.schema(schema).parquet(files: _*)
-        case None =>
-          spark.read.schema(schema).option("basePath", root).parquet(root)
-      }
-      }
-      val rv = rootVersion(root)
-      eqDelMask(rootDf, schema, tombs.filter(_._1 > rv))
+      pruned
     }
-    parts.reduce(_ unionByName _).filter(pred)
+    val keep: Set[Path] = ctx.live.zip(kept).flatMap { case (l, k) =>
+      k.fold(l.files.map(_._1.getPath))(_.map(p =>
+        new Path(p).makeQualified(fs.getUri, fs.getWorkingDirectory)))
+    }.toSet
+    scan(ctx, schema, keep = keep).filter(pred)
       .select(schema.fieldNames.map(col).toIndexedSeq: _*)
   }
 
@@ -3959,7 +3914,39 @@ object Lakehouse {
     * correctness anchor (every pass sees one snapshot) and the fix for
     * the duplicated-listing cost the r9 bench surfaced.
     */
-  final case class MaskedCtx(roots: Seq[String], basis: ReadBasis,
+  final case class MaskedCtx(live: Seq[LiveRoot], basis: ReadBasis,
       tombs: Seq[(Long, String, Seq[String])],
-      dvs: Seq[(Long, Map[String, String])])
+      dvs: Seq[(Long, Map[String, String])]) {
+    def roots: Seq[String] = live.map(_.root)
+  }
+
+  /** One live root as the read planner lists it: the root, its version
+    * (what the sequence rule compares mask versions against; the
+    * pre-versioning base reads as 0), each data file with the dir names
+    * between root and file, and whether the root carries a DV / an
+    * equality-delete sidecar dir.
+    */
+  final case class LiveRoot(root: String, v: Long,
+      files: Seq[(org.apache.hadoop.fs.FileStatus, Seq[String])],
+      dv: Boolean, eqDel: Boolean)
+
+  /** Spark's hidden-path rule for file-source listings: `_`-prefixed
+    * names without `=`, dot files, and in-flight copies.
+    */
+  private[storage] def hiddenName(n: String): Boolean =
+    (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+      n.endsWith("._COPYING_")
+
+  /** A `k=v` dir's raw value as the partition column's internal value —
+    * the discovery rule for a user-typed partition column: unescaped,
+    * cast to the column type, `__HIVE_DEFAULT_PARTITION__` = NULL.
+    */
+  private[storage] def partitionValue(raw: String,
+      dt: org.apache.spark.sql.types.DataType, tz: String): Any = {
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Literal}
+    if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
+    else Cast(Literal(ExternalCatalogUtils.unescapePathName(raw)), dt,
+      Some(tz), EvalMode.TRY).eval()
+  }
 }

@@ -84,6 +84,42 @@ class PipelineSpec extends SparkSpec {
       Strings.FraudAmountGuessing -> 2L))
   }
 
+  test("a fact row with a NULL trans_date rides through the mart") {
+    // the row lands in `trans_dt_day=__HIVE_DEFAULT_PARTITION__`: the
+    // layout can no longer prove the newest day, so the cutoff falls
+    // back to the scan (which ignores the NULL) and the report is the
+    // pinned one
+    val lake = new Lakehouse(spark, tmpDir("pipeline-nullday"))
+    (1 to 3).foreach { day =>
+      Ingest.loadDayFromParquet(lake, fixture(day))
+      Etl.normalizeTransactions(lake)
+      if (day == 3) {
+        val fact = lake.read("fact_transactions")
+        val row = fact.limit(1)
+          .withColumn("trans_id", lit("null-day"))
+          .withColumn("trans_date", lit(null).cast("timestamp"))
+          .collect().toSeq
+        lake.appendPartitionedByDay("fact_transactions",
+          spark.createDataFrame(
+            spark.sparkContext.parallelize(row, 1), fact.schema),
+          "trans_date")
+      }
+      Mart.addReportData(lake, MartStaging.Scd1Dims, clock)
+    }
+    assert(lake.maxPartitionDay("fact_transactions").isEmpty)
+    assert(lake.readWithPartitionColumns("fact_transactions")
+      .filter(col("trans_dt_day").isNull)
+      .select("trans_id").collect().map(_.getString(0)).toSeq ==
+      Seq("null-day"))
+    val byType = lake.read("report").groupBy(col("fraud_type")).count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(byType === Map(
+      Strings.FraudCityHop -> 682L,
+      Strings.FraudExpiredContract -> 26L,
+      Strings.FraudExpiredPassport -> 20L,
+      Strings.FraudAmountGuessing -> 2L))
+  }
+
   test("day-4 churn: SCD2 closes and SCD1 updates fire, invariants hold") {
     // day4.parquet (tools/make_day4.py) mutates 30 terminals, ~20 clients,
     // 20 accounts, 15 cards; row-identical to the DuckDB replay over

@@ -399,4 +399,79 @@ class DvSpec extends SparkSpec {
         .start().awaitTermination()
     }
   }
+
+  test("MoR DML on a day-partitioned fact with several live roots") {
+    import spark.implicits._
+    val lake = mkLake("fact")
+    def day(ids: Seq[String], at: String) = spark.createDataFrame(
+      ids.map(i => (i, ts(at), if (i.endsWith("neg")) "-1.00" else "1.00"))
+        .toDF("trans_id", "trans_date", "amt0")
+        .select(col("trans_id"), col("trans_date"),
+          lit("c").as("card_num"), lit("o").as("oper_type"),
+          col("amt0").cast("decimal(18,2)").as("amt"),
+          lit("ok").as("oper_result"), lit("t").as("terminal")).rdd,
+      graft.model.Schemas.factTransactions)
+    val fact = graft.model.Schemas.factTransactions
+    // two commits = two live roots, each with its own trans_dt_day dirs
+    lake.appendPartitionedByDay("fact_transactions",
+      day(Seq("a1", "a2neg"), "2020-05-01 10:00:00"), "trans_date")
+    lake.appendPartitionedByDay("fact_transactions",
+      day(Seq("b1neg", "b2"), "2020-05-02 10:00:00"), "trans_date")
+    lake.deleteRowsMoR("fact_transactions", fact, col("amt") < 0)
+    assert(lake.readWithPartitionColumns("fact_transactions")
+      .select("trans_id", "trans_dt_day").as[(String, java.sql.Date)]
+      .collect().toSet == Set("a1" -> d("2020-05-01"), "b2" -> d("2020-05-02")))
+    // the MoR UPDATE's post-images land unpartitioned: the mixed layout
+    // still reads as one relation, masks per file
+    lake.updateRowsMoR("fact_transactions", fact, col("trans_id") === "b2",
+      Seq("oper_result" -> lit("upd")))
+    assert(lake.read("fact_transactions")
+      .select("trans_id", "oper_result").as[(String, String)]
+      .collect().toSet == Set("a1" -> "ok", "b2" -> "upd"))
+  }
+
+  test("one task writing several days leaves no repeated file name " +
+    "for a deletion vector to over-delete") {
+    import spark.implicits._
+    val lake = mkLake("fact1task")
+    val fact = graft.model.Schemas.factTransactions
+    val rows = spark.createDataFrame(Seq(
+      ("x1", ts("2020-05-01 10:00:00"), "-1.00"),
+      ("x2", ts("2020-05-01 11:00:00"), "1.00"),
+      ("y1", ts("2020-05-02 10:00:00"), "1.00"),
+      ("y2", ts("2020-05-02 11:00:00"), "1.00"),
+      ("z1", null, "1.00")).toDF("trans_id", "trans_date", "amt0")
+      .select(col("trans_id"), col("trans_date"),
+        lit("c").as("card_num"), lit("o").as("oper_type"),
+        col("amt0").cast("decimal(18,2)").as("amt"),
+        lit("ok").as("oper_result"), lit("t").as("terminal")).rdd, fact)
+    // ONE task writes all three day dirs (the NULL day included): Spark
+    // names the first file of each dir alike
+    lake.appendPartitionedByDay("fact_transactions", rows.coalesce(1),
+      "trans_date")
+    val hfs = new Path(lake.dataPaths("fact_transactions").head)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val names = lake.dataPaths("fact_transactions").flatMap(r =>
+      hfs.listStatus(new Path(r)).toSeq.filter(_.isDirectory)
+        .flatMap(dir => hfs.listStatus(dir.getPath).toSeq))
+      .map(_.getPath.getName).filter(_.endsWith(".parquet"))
+    assert(names.size == 3 && names.distinct.size == 3, names)
+    // the delete's position 0 of day 1 must not mask position 0 of the
+    // other days
+    lake.deleteRowsMoR("fact_transactions", fact, col("amt") < 0)
+    assert(lake.readWithPartitionColumns("fact_transactions")
+      .select("trans_id", "trans_dt_day").as[(String, java.sql.Date)]
+      .collect().toSet == Set("x2" -> d("2020-05-01"),
+        "y1" -> d("2020-05-02"), "y2" -> d("2020-05-02"), "z1" -> null))
+  }
+
+  test("an equality-delete probe fails on a file the read did not list") {
+    val probe = graft.functions.EqDelSurvives(Nil, Nil,
+      org.apache.spark.sql.catalyst.expressions.Literal("x"),
+      Map("file:/t/_v1/part-0.parquet" -> 1L))
+    assert(probe.probe(Array.empty, "file:/t/_v1/part-0.parquet"))
+    val e = intercept[IllegalStateException](
+      probe.probe(Array.empty, "file:/t/_v1/part-1.parquet"))
+    assert(e.getMessage.contains("part-1.parquet"))
+  }
 }

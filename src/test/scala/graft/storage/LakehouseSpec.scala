@@ -884,4 +884,155 @@ class LakehouseSpec extends SparkSpec {
       .collect().toSet == Set("c1", "c2", "c3"))
     assert(lake.versions("dim_cards").size == 2) // full + delta intact
   }
+
+  private def scanNodes(df: org.apache.spark.sql.DataFrame): Int =
+    df.queryExecution.sparkPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }.size
+
+  test("every live-chain read plans ONE file scan, whatever its roots") {
+    import org.apache.spark.sql.functions._
+    val lake = new Lakehouse(spark, tmpDir("lake-one-scan"))
+    (1 to 6).foreach(i => lake.append("dim_cards", dimDf(s"c$i" -> s"a$i")))
+    assert(lake.dataPaths("dim_cards").size == 6)
+    assert(scanNodes(lake.read("dim_cards")) == 1)
+    // a DV below some roots and not others: per-file masks, one scan
+    lake.deleteRowsMoR("dim_cards", graft.model.Schemas.dimCards,
+      col("card_num") === "c2")
+    lake.append("dim_cards", dimDf("c2" -> "again"))
+    val dv = lake.read("dim_cards")
+    assert(scanNodes(dv) == 1)
+    assert(scanNodes(lake.readMaskedWithPos("dim_cards",
+      graft.model.Schemas.dimCards)) == 1)
+    assert(dv.select("card_num", "account_num").as[(String, String)]
+      .collect().toSet == ((1 to 6).filter(_ != 2)
+        .map(i => s"c$i" -> s"a$i") :+ ("c2" -> "again")).toSet)
+    // an eq-del tombstone likewise
+    lake.deleteByKeys("dim_cards", Seq("c3").toDF("card_num"))
+    val eq = lake.read("dim_cards")
+    assert(scanNodes(eq) == 1)
+    assert(eq.count() == 5)
+
+    // the day-partitioned fact: one root per day, a NULL-day row too
+    val fact = graft.model.Schemas.factTransactions
+    def facts(rows: (String, java.sql.Timestamp)*) = spark.createDataFrame(
+      rows.toDF("trans_id", "trans_date")
+        .withColumn("card_num", lit("c"))
+        .withColumn("oper_type", lit("o"))
+        .withColumn("amt", lit("1.00").cast("decimal(18,2)"))
+        .withColumn("oper_result", lit("ok"))
+        .withColumn("terminal", lit("t")).rdd, fact)
+    lake.appendPartitionedByDay("fact_transactions", facts(
+      "t1" -> ts("2020-05-01 10:00:00"), "t2" -> ts("2020-05-01 11:00:00")),
+      "trans_date")
+    lake.appendPartitionedByDay("fact_transactions", facts(
+      "t3" -> ts("2020-05-02 10:00:00"), "tn" -> null), "trans_date")
+    lake.appendPartitionedByDay("fact_transactions", facts(
+      "t4" -> ts("2020-05-03 10:00:00")), "trans_date")
+    val withDay = lake.readWithPartitionColumns("fact_transactions")
+    assert(scanNodes(withDay) == 1)
+    assert(withDay.select("trans_id", "trans_dt_day")
+      .as[(String, Option[java.sql.Date])].collect().toSet == Set(
+        "t1" -> Some(d("2020-05-01")), "t2" -> Some(d("2020-05-01")),
+        "t3" -> Some(d("2020-05-02")), "tn" -> None,
+        "t4" -> Some(d("2020-05-03"))))
+    // partition pruning still works off the explicit spec
+    val pruned = withDay.filter(col("trans_dt_day") >= lit(d("2020-05-02")))
+    assert(pruned.select("trans_id").as[String].collect().toSet ==
+      Set("t3", "t4"))
+    assert(pruned.queryExecution.executedPlan.toString
+      .contains("PartitionFilters: [isnotnull(trans_dt_day"))
+    assert(scanNodes(lake.read("fact_transactions")) == 1)
+    lake.versions("fact_transactions").map(_._1).zip(Seq(2L, 4L, 5L))
+      .foreach { case (v, n) =>
+        val at = lake.readAt("fact_transactions", v)
+        assert(scanNodes(at) == 1)
+        assert(at.count() == n)
+      }
+    // a NULL-day dir makes the newest day unprovable from the layout
+    assert(lake.maxPartitionDay("fact_transactions").isEmpty)
+    // a MoR UPDATE's flat post-image root beside the day dirs: still one
+    // scan, and a flat file reads the partition column as NULL
+    lake.updateRowsMoR("fact_transactions", fact, col("trans_id") === "t1",
+      Seq("oper_result" -> lit("upd")))
+    assert(scanNodes(lake.read("fact_transactions")) == 1)
+    lake.appendPartitionedByDay("fact_transactions", facts(
+      "t5" -> ts("2020-05-04 10:00:00")), "trans_date")
+    val mixed = lake.readWithPartitionColumns("fact_transactions")
+    assert(scanNodes(mixed) == 1)
+    assert(mixed.select("trans_id", "oper_result", "trans_dt_day")
+      .as[(String, String, Option[java.sql.Date])].collect().toSet == Set(
+        ("t1", "upd", None), ("t2", "ok", Some(d("2020-05-01"))),
+        ("t3", "ok", Some(d("2020-05-02"))), ("tn", "ok", None),
+        ("t4", "ok", Some(d("2020-05-03"))),
+        ("t5", "ok", Some(d("2020-05-04")))))
+  }
+
+  test("one-scan reads serve the modelled rows at every version: " +
+    "pre-versioning base, DV chain, eq-del tombstones, MoR update, " +
+    "rebased delta") {
+    import org.apache.spark.sql.functions._
+    val lake = new Lakehouse(spark, tmpDir("lake-one-scan-model"))
+    val schema = graft.model.Schemas.dimCards
+    def got(df: org.apache.spark.sql.DataFrame) =
+      df.select("card_num", "account_num").as[(String, String)].collect()
+        .toSeq.sorted
+    var model = Seq.empty[(String, String)]
+    val snaps = scala.collection.mutable.LinkedHashMap.empty[Long,
+      Seq[(String, String)]]
+    def step(body: => Unit)(next: Seq[(String, String)]): Unit = {
+      body
+      model = next.sorted
+      snaps(lake.versions("dim_cards").last._1) = model
+      assert(got(lake.read("dim_cards")) == model)
+      assert(scanNodes(lake.read("dim_cards")) == 1)
+      assert(got(lake.readMaskedWithPos("dim_cards", schema)) == model)
+      // the zone-map range read goes through the same planner and masks
+      assert(got(lake.readBetween("dim_cards", "card_num", "c1", "c2")) ==
+        model.filter(r => r._1 >= "c1" && r._1 <= "c2"))
+    }
+    def rows(tag: String, ks: Int*) = ks.map(k => s"c$k" -> s"$tag$k")
+    // pre-versioning base: plain files at the table root (version 0)
+    dimDf(rows("b", 0 until 10: _*): _*).write.parquet(
+      lake.tablePath("dim_cards"))
+    model = rows("b", 0 until 10: _*).sorted
+    assert(got(lake.read("dim_cards")) == model)
+    step(lake.append("dim_cards", dimDf(rows("a", 10 until 20: _*): _*)))(
+      model ++ rows("a", 10 until 20: _*))
+    val byFour = Set(0, 4, 8, 12, 16).map(k => s"c$k")
+    step(lake.deleteRowsMoR("dim_cards", schema,
+      col("card_num").isin(byFour.toSeq: _*)))(
+      model.filterNot(r => byFour(r._1)))
+    step(lake.append("dim_cards", dimDf(rows("r", 0, 1, 2, 3): _*)))(
+      model ++ rows("r", 0, 1, 2, 3))
+    step(lake.deleteByKeys("dim_cards", Seq("c1", "c12", "c99")
+      .toDF("card_num")))(model.filterNot(r => Set("c1", "c12")(r._1)))
+    step(lake.append("dim_cards", dimDf("c1" -> "again")))(
+      model :+ ("c1" -> "again"))
+    step(lake.updateRowsMoR("dim_cards", schema, col("card_num") === "c2",
+      Seq("account_num" -> lit("upd"))))(
+      model.map(r => if (r._1 == "c2") r._1 -> "upd" else r))
+    step(lake.deleteRowsMoR("dim_cards", schema,
+      col("account_num") === "again"))(model.filterNot(_._2 == "again"))
+    // time travel through the same planner, by version and by time
+    snaps.foreach { case (v, rs) =>
+      val at = lake.readAt("dim_cards", v)
+      assert(scanNodes(at) == 1)
+      assert(got(at) == rs, s"readAt $v")
+    }
+    lake.history("dim_cards").foreach { case (_, _, ms) =>
+      val v = lake.history("dim_cards").filter(_._3 <= ms).map(_._1).max
+      assert(got(lake.readAsOf("dim_cards", ms)) == snaps(v))
+    }
+    // a delta committing inside a compaction's window rebases above it
+    val before = model
+    lake.append("dim_cards", dimDf(rows("x", 50, 51): _*),
+      beforeCommit = () => lake.compact("dim_cards", numFiles = 1))
+    model = (before ++ rows("x", 50, 51)).sorted
+    val vs = lake.versions("dim_cards")
+    assert(vs.map(_._2) == Seq(true, false), vs)
+    assert(got(lake.readAt("dim_cards", vs.head._1)) == before)
+    assert(got(lake.read("dim_cards")) == model)
+    assert(scanNodes(lake.read("dim_cards")) == 1)
+  }
 }

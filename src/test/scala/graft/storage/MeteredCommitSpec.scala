@@ -75,17 +75,17 @@ class MeteredCommitSpec extends SparkSpec {
         "mask-free roots must group into ONE relation")
 
       // one DV: roots below it carry the mask, the DV's own commit
-      // (and anything later) doesn't — exactly two groups
+      // (and anything later) doesn't — the mask applies per FILE, so
+      // the scan stays ONE relation
       lake.deleteRowsMoR("t", schema, col("k") === 5L)
       lake.append("t", batch(2000000L, 1L), statsCols = Seq("k"))
       val oneMask = lake.readMaskedWithPos("t", schema)
-      assert(scanCount(oneMask) == 2,
-        "one DV must split the scan into exactly two mask groups " +
-          "(below the DV / above it)")
+      assert(scanCount(oneMask) == 1,
+        "a DV must not split the scan: per-file masks, one relation")
       assert(oneMask.filter(col("k") === 5L).count() == 0L,
-        "the grouped scan must still apply the mask")
+        "the single scan must still apply the mask")
       assert(oneMask.count() ==
-        12L * 100L + 3L - 1L, "grouped-scan row count")
+        12L * 100L + 3L - 1L, "single-scan row count")
     }
   }
 

@@ -388,7 +388,6 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     val basis = Lakehouse.ReadBasis(committed.map(_._1).max,
       committed.map(_._1).toSet)
     scan(ctxOver(roots, basis), schema)
-      .select(schema.fieldNames.map(col).toIndexedSeq: _*)
   }
 
   /** Change feed: the rows appended by the committed DELTA versions in
@@ -470,17 +469,9 @@ final class Lakehouse(val spark: SparkSession, val root: String,
   /** Read a table; absent or empty tables yield an empty DataFrame with the
     * registered schema, so first-run ETL needs no special-casing.
     */
-  def read(name: String): DataFrame = {
-    val schema = Schemas.byName.getOrElse(name,
-      throw new IllegalArgumentException(s"unknown table: $name"))
-    if (exists(name))
-      // explicit schema: an empty parquet dir or partition-discovery columns
-      // must not change the contract
-      readRootsWithBasis(name, schema)._1
-        .select(schema.fieldNames.map(col).toIndexedSeq: _*)
-    else
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-  }
+  def read(name: String): DataFrame =
+    read(name, Schemas.byName.getOrElse(name,
+      throw new IllegalArgumentException(s"unknown table: $name")))
 
   /** [[read]] with a caller-supplied contract schema, for versioned
     * tables outside the registered DWH model (e.g. a CDC current-state
@@ -499,10 +490,10 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     */
   def readWithBasis(name: String,
       schema: StructType): (DataFrame, Lakehouse.ReadBasis) =
-    if (exists(name)) {
-      val (df, basis) = readRootsWithBasis(name, schema)
-      (df.select(schema.fieldNames.map(col).toIndexedSeq: _*), basis)
-    } else
+    // explicit schema: an empty parquet dir or partition-discovery
+    // columns must not change the contract
+    if (exists(name)) readRootsWithBasis(name, schema)
+    else
       (spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema),
         Lakehouse.ReadBasis(0L, Set.empty))
 
@@ -2797,6 +2788,13 @@ final class Lakehouse(val spark: SparkSession, val root: String,
       // same stance as compaction's recorded-empty change data)
       .filterNot(t => t._4.map(_.rewrite).getOrElse(
         fs.exists(new Path(t._2, Lakehouse.Protocol.MarkerRewrite))))
+    // a commit's own data files as inserts: the sequence rule applies
+    // none of its own masks to them, so the planner masks nothing
+    def inserts(v: Long, p: Path): DataFrame =
+      scan(ctxOver(Seq(p.toString), Lakehouse.ReadBasis(v, Set(v))), schema)
+        .withColumn(ChangeTypeCol, lit("insert"))
+        .withColumn(CommitVersionCol, lit(v))
+        .select(outCols: _*)
     val parts = range.map {
       case (v, p, _, det) if det.map(_.dv).getOrElse(
           fs.exists(new Path(p, Lakehouse.Protocol.DvDir))) =>
@@ -2840,13 +2838,7 @@ final class Lakehouse(val spark: SparkSession, val root: String,
         // post-images emit as inserts — update-as-CDC is the standard
         // delete(pre-image) + insert(post-image) pair, which is what
         // signed-aggregate MV folds consume
-        if (listDataFilesIn(p).isEmpty) deletes
-        else deletes.unionByName(
-          spark.read.schema(schema).option("basePath", p.toString)
-            .parquet(p.toString)
-            .withColumn(ChangeTypeCol, lit("insert"))
-            .withColumn(CommitVersionCol, lit(v))
-            .select(outCols: _*))
+        deletes.unionByName(inserts(v, p))
       case (v, p, false, det) if det.map(_.eqDel).getOrElse(
           fs.exists(new Path(p, EqDelDir))) =>
         // equality-delete tombstones: the standard delete-by-key CDC
@@ -2858,12 +2850,7 @@ final class Lakehouse(val spark: SparkSession, val root: String,
           .withColumn(ChangeTypeCol, lit("delete"))
           .withColumn(CommitVersionCol, lit(v))
           .select(outCols: _*)
-      case (v, p, false, _) =>
-        spark.read.schema(schema).option("basePath", p.toString)
-          .parquet(p.toString)
-          .withColumn(ChangeTypeCol, lit("insert"))
-          .withColumn(CommitVersionCol, lit(v))
-          .select(outCols: _*)
+      case (v, p, false, _) => inserts(v, p)
       case (v, p, true, _) =>
         val cdfPath = new Path(p, CdfDir)
         require(fs.exists(cdfPath),
@@ -3212,7 +3199,6 @@ final class Lakehouse(val spark: SparkSession, val root: String,
       }
     val (live, basis) = liveRootsAndBasis(name)
     scan(ctxOver(live ++ staged, basis), schema)
-      .select(schema.fieldNames.map(col).toIndexedSeq: _*)
   }
 
   /** Atomically publish `branch`: each staged dir gets the real DELTA
@@ -3478,7 +3464,6 @@ final class Lakehouse(val spark: SparkSession, val root: String,
         new Path(p).makeQualified(fs.getUri, fs.getWorkingDirectory)))
     }.toSet
     scan(ctx, schema, keep = keep).filter(pred)
-      .select(schema.fieldNames.map(col).toIndexedSeq: _*)
   }
 
   /** Bucketed write: pre-shuffles into `buckets` files per bucket key and

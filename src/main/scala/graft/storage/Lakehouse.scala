@@ -670,27 +670,36 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     * preserves) mark the table flat. One listStatus on one root — not a
     * per-root walk; at object-store scale this is a single LIST call.
     */
-  private def readSchema(name: String, schema: StructType): StructType = {
-    if (name != "fact_transactions") return schema
-    val flat = exists(name) && dataPaths(name).lastOption.exists { root =>
-      fs.listStatus(new Path(root)).exists(st =>
-        st.isFile && st.getPath.getName.endsWith(".parquet"))
-    }
-    if (flat) schema
+  private def readSchema(name: String, schema: StructType): StructType =
+    layoutSchema(name, schema, exists(name) &&
+      dataPaths(name).lastOption.exists(root =>
+        fs.listStatus(new Path(root)).exists(st =>
+          st.isFile && st.getPath.getName.endsWith(".parquet"))))
+
+  /** [[readSchema]] given the layout probe's answer: `flat` = data files
+    * sit directly in the newest live root (evaluated for the fact only).
+    */
+  private def layoutSchema(name: String, schema: StructType,
+      flat: => Boolean): StructType =
+    if (name != "fact_transactions" || flat) schema
     else schema.add("trans_dt_day", org.apache.spark.sql.types.DateType)
-  }
 
   /** Like [[read]] but keeps physical partition columns (e.g. the fact's
     * `trans_dt_day`) so callers can write partition-pruning predicates.
+    * The layout probe answers from the listing the scan already holds —
+    * no second resolve or root listing.
     */
   def readWithPartitionColumns(name: String): DataFrame = {
     val schema = Schemas.byName.getOrElse(name,
       throw new IllegalArgumentException(s"unknown table: $name"))
-    val full = readSchema(name, schema)
-    if (exists(name))
-      scan(maskedCtx(name), full)
-    else
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], full)
+    if (exists(name)) {
+      val ctx = maskedCtx(name)
+      scan(ctx, layoutSchema(name, schema, ctx.live.lastOption.exists(
+        _.files.exists(f => f._2.isEmpty &&
+          f._1.getPath.getName.endsWith(".parquet")))))
+    } else
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+        layoutSchema(name, schema, flat = false))
   }
 
   /** The storage seam every commit-atomicity assumption routes through
